@@ -326,8 +326,7 @@ object SparkEntry {
     // incremental maintenance is itself driver-checked
     "dim_scd2_lookup_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
-      val table = java.nio.file.Files
-        .createTempDirectory("graft-scd2-inc-").toString + "/scd2"
+      val table = graft.core.Scratch.dir(s, "scd2-inc")
       val orders = Tables.orders(s, d)
       (0 until 3).foreach(i => graft.operators.dim.Scd2.mergeVersions(
         orders.filter(pmod(col("o_orderkey"), lit(3)) === i),
@@ -342,8 +341,7 @@ object SparkEntry {
     // the incremental path is itself driver-checked
     "dim_agg_rollup_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, pmod, lit, date_format}
-      val table = java.nio.file.Files
-        .createTempDirectory("graft-aggidx-").toString + "/rollup"
+      val table = graft.core.Scratch.dir(s, "aggidx")
       val li = Tables.lineitem(s, d)
       (0 until 3).foreach(i => graft.streaming.AggIndex.mergeBatch(
         li.filter(pmod(col("l_orderkey"), lit(3)) === i), table,
@@ -366,8 +364,7 @@ object SparkEntry {
     // the oracle checks the derived numerator exactly
     "dim_agg_var_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, pmod, lit}
-      val table = java.nio.file.Files
-        .createTempDirectory("graft-aggvar-").toString + "/rollup"
+      val table = graft.core.Scratch.dir(s, "aggvar")
       val li = Tables.lineitem(s, d)
       (0 until 3).foreach(i => graft.streaming.AggIndex.mergeBatch(
         li.filter(pmod(col("l_orderkey"), lit(3)) === i), table,
@@ -388,8 +385,7 @@ object SparkEntry {
     // the one-shot join, so rebuild equivalence is driver-checked
     "dim_wide_join_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, pmod, lit, round}
-      val table = java.nio.file.Files
-        .createTempDirectory("graft-joinidx-").toString + "/join"
+      val table = graft.core.Scratch.dir(s, "joinidx")
       val ord = Tables.orders(s, d).select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       // wide-row identity: the FULL right row — the driver's synthetic
@@ -428,8 +424,7 @@ object SparkEntry {
     // four small commits cost a fraction of the view-thirds schedule
     "dim_wide_join_smalldelta" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, pmod, lit, round}
-      val table = java.nio.file.Files
-        .createTempDirectory("graft-joinsd-").toString + "/join"
+      val table = graft.core.Scratch.dir(s, "joinsd")
       val ord = Tables.orders(s, d).select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       val liCols = Seq("o_orderkey", "l_linenumber", "l_partkey",

@@ -43,7 +43,7 @@ object Ranking {
     require(sort.nonEmpty, "withGlobalRowNumber: need sort columns")
     val spark = df.sparkSession
     val pid = "__graft_rn_pid"
-    val scratch = Scratch.dir(spark, "graft.rank.scratchDir", "rank")
+    val scratch = Scratch.dir(spark, "rank")
     df.repartitionByRange(sort: _*)
       .withColumn(pid, spark_partition_id())
       .write.parquet(scratch)

@@ -44,19 +44,13 @@ object Joins {
     // spillable, no cached-block leakage into later queries; the file
     // backs the returned frame and is reaped at JVM shutdown (the
     // PageRank/Components scratch pattern).
-    val dimDir = java.nio.file.Files
-      .createTempDirectory("graft-bloomjoin-")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dimDir.toFile)
-    }
-    dim0.write.mode("overwrite").parquet(dimDir.toString)
-    val dim = lineitem.sparkSession.read.parquet(dimDir.toString)
+    val spark = lineitem.sparkSession
+    val dimDir = graft.core.Scratch.dir(spark, "bloomjoin")
+    dim0.write.parquet(dimDir)
+    val dim = spark.read.parquet(dimDir)
     val bloom = dim.stat.bloomFilter("o_orderkey",
       math.max(dim.count(), 1L), fpp)
-    val bcast = lineitem.sparkSession.sparkContext.broadcast(bloom)
+    val bcast = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((k: Long) => bcast.value.mightContainLong(k))
     lineitem
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))

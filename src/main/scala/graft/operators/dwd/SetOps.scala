@@ -88,7 +88,7 @@ object SetOps {
     * the result is deterministic and identical to the window form
     * (spec + oracle both pin it).
     *
-    * MEASURED caveat (`tools/TopKSoak`, 1.5M rows / 15k keys): Spark
+    * MEASURED caveat (SCALE.md, 1.5M rows / 15k keys): Spark
     * 3.5+'s `WindowGroupLimit` rewrite already pushes a per-partition
     * top-k below the exchange for `row_number() <= k` filters, so the
     * window form's shuffle is equally bounded (within 2%) and its

@@ -153,7 +153,7 @@ object Behavior {
     // five consumers, each of which would otherwise re-run the fact
     // scan + aggregate
     val spark = orders.sparkSession
-    val dir = graft.core.Scratch.dir(spark, "spark.graft.rfm.scratch", "rfm")
+    val dir = graft.core.Scratch.dir(spark, "rfm")
     cust.crossJoin(broadcast(anchor))
       .select(col("o_custkey"),
         datediff(col("anchor"), col("last_day")).cast("long")

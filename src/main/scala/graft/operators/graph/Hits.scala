@@ -1,6 +1,6 @@
 package graft.operators.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** HITS hubs-and-authorities (Kleinberg 1999, "Authoritative sources
@@ -24,9 +24,6 @@ import org.apache.spark.sql.functions._
   * the only driver values are the fixpoint fingerprint scalars. */
 object Hits {
 
-  private def scratch(spark: SparkSession): String =
-    graft.core.Scratch.dir(spark, "spark.graft.hits.scratch", "hits")
-
   /** `rounds` HITS iterations over directed (src → dst) edges; hubs
     * live on src, authorities on dst. Returns both sides' top-`k`:
     * (node, kind, score_micro, rank) with rank over (score desc,
@@ -41,7 +38,7 @@ object Hits {
            earlyExit: Boolean = false): DataFrame = {
     require(rounds >= 1, "hits: need rounds >= 1")
     val spark = edges0.sparkSession
-    val dir = scratch(spark)
+    val dir = graft.core.Scratch.dir(spark, "hits")
     edges0.write.mode("overwrite").parquet(s"$dir/edges")
     val edges = spark.read.parquet(s"$dir/edges")
 

@@ -1,6 +1,6 @@
 package graft.operators.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,16 +23,13 @@ import org.apache.spark.sql.functions._
   * round proves all later rounds are no-ops. */
 object LabelProp {
 
-  private def scratch(spark: SparkSession): String =
-    graft.core.Scratch.dir(spark, "spark.graft.labelprop.scratch", "lp")
-
   /** Exact `rounds`-step LPA labels. `edges0` carries (src, dst) with
     * both directions present; labels start as the node id. Output:
     * (node, label) after the final round. */
   def propagate(edges0: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "propagate: need rounds >= 1")
     val spark = edges0.sparkSession
-    val dir = scratch(spark)
+    val dir = graft.core.Scratch.dir(spark, "lp")
     edges0.write.mode("overwrite").parquet(s"$dir/edges")
     val edges = spark.read.parquet(s"$dir/edges")
     // fixpoint probe: labels are not monotone (unlike sssp distances),

@@ -48,36 +48,6 @@ object PageRank {
     e.union(e.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
-  private lazy val tempRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-pr-")
-    sys.addShutdownHook(rmTree(d.toFile))
-    d.toString
-  }
-
-  /** Per-run scratch directory. The returned DataFrame stays backed
-    * by the final round file for its whole lifetime, so the subtree
-    * can't be deleted eagerly — cleanup is JVM-shutdown for BOTH
-    * roots: the default temp root has one hook for the whole tree,
-    * and a `spark.graft.pagerank.scratch` override registers a hook
-    * per run, so repeated runs never accumulate UUID directories on
-    * the configured path either. */
-  private def scratchDir(spark: org.apache.spark.sql.SparkSession,
-                         prefix: String): String = {
-    val id = s"$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.conf.getOption("spark.graft.pagerank.scratch") match {
-      case None => s"$tempRoot/$id"
-      case Some(root) =>
-        val d = s"$root/$id"
-        sys.addShutdownHook(rmTree(new java.io.File(d)))
-        d
-    }
-  }
-
   /** @param earlyExitEps stop when `max(abs(Δr))` over one
     *   materialization block falls to or below this fixed-point
     *   threshold — OFF by default because the SQL oracle unrolls
@@ -109,7 +79,7 @@ object PageRank {
     // lineage cut + spillable + zero persisted-block leakage; the
     // final round backs the returned frame for its whole lifetime
     // (JVM-shutdown cleanup, the CC kernel's pattern).
-    val scratch = scratchDir(spark, "pr")
+    val scratch = graft.core.Scratch.dir(spark, "pr")
     // The edge expression executes ONCE: deg derives from edges, so
     // joining edges0 ⋈ deg(edges0) unmaterialized would run the
     // (potentially expensive) upstream edge build twice. Then edges ⋈
@@ -239,7 +209,7 @@ object PageRank {
   def personalizedPageRank(edges0: DataFrame, seedMod: Long = 100L,
                            iters: Int = 6): DataFrame = {
     val spark = edges0.sparkSession
-    val scratch = scratchDir(spark, "ppr")
+    val scratch = graft.core.Scratch.dir(spark, "ppr")
     edges0.write.mode("overwrite").parquet(s"$scratch/edges")
     val edges = spark.read.parquet(s"$scratch/edges")
     val deg0 = edges.groupBy("src").agg(count(lit(1)).as("deg"))

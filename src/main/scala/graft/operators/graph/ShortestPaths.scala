@@ -1,6 +1,6 @@
 package graft.operators.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Single-source shortest paths over WEIGHTED edges — the weighted
@@ -21,9 +21,6 @@ import org.apache.spark.sql.functions._
   * no-change round proves every later round is a no-op. */
 object ShortestPaths {
 
-  private def scratch(spark: SparkSession): String =
-    graft.core.Scratch.dir(spark, "spark.graft.sssp.scratch", "sssp")
-
   /** Exact min-cost distances from `source` over paths of at most
     * `rounds` edges. `edges0` must carry (src, dst, w) with w >= 0
     * and both directions of every undirected edge; `source` defaults
@@ -34,7 +31,7 @@ object ShortestPaths {
     require(rounds >= 1, "sssp: need rounds >= 1")
     val spark = edges0.sparkSession
     import spark.implicits._
-    val dir = scratch(spark)
+    val dir = graft.core.Scratch.dir(spark, "sssp")
     edges0.write.mode("overwrite").parquet(s"$dir/edges")
     val edges = spark.read.parquet(s"$dir/edges")
     val s0 = source.getOrElse {

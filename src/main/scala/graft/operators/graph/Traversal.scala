@@ -1,6 +1,6 @@
 package graft.operators.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph traversals beyond ranking: single-source BFS hop
@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Traversal {
 
-  private def scratch(spark: SparkSession): String =
-    graft.core.Scratch.dir(spark, "spark.graft.traversal.scratch", "trav")
-
   /** Single-source BFS: minimum hop count from `source` to every
     * node reachable within `maxHops`. Level-synchronous frontier
     * expansion — each round is ONE keyed join (frontier ⋈ edges on
@@ -41,7 +38,7 @@ object Traversal {
     require(maxHops >= 0, "bfsHops: need maxHops >= 0")
     val spark = edges0.sparkSession
     import spark.implicits._
-    val dir = scratch(spark)
+    val dir = graft.core.Scratch.dir(spark, "trav")
     edges0.write.mode("overwrite").parquet(s"$dir/edges")
     val edges = spark.read.parquet(s"$dir/edges")
     // one bounded scalar (same contract as PageRank's node count);
@@ -100,7 +97,7 @@ object Traversal {
   def kCore(edges0: DataFrame, k: Int, rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1, "kCore: need k >= 1, rounds >= 1")
     val spark = edges0.sparkSession
-    val dir = scratch(spark)
+    val dir = graft.core.Scratch.dir(spark, "trav")
     edges0.write.mode("overwrite").parquet(s"$dir/edges")
     val edges = spark.read.parquet(s"$dir/edges")
     // the survivor count rides every degree write as an `observe`

@@ -36,18 +36,6 @@ import org.apache.spark.sql.functions._
   * counts each triangle once via a<b<c) must match bit-for-bit. */
 object Triangles {
 
-  private lazy val tempRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-tri-")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(d.toFile)
-    }
-    d.toString
-  }
-
   /** Per-node triangle membership counts over an undirected edge set.
     * Input may carry duplicates and/or both directions; self-loops are
     * dropped. Output: (node, triangles) for EVERY node with an edge,
@@ -65,9 +53,7 @@ object Triangles {
     * 3-way self-union (which would run the close three times). */
   def triangleCounts(edges0: DataFrame): DataFrame = {
     val spark = edges0.sparkSession
-    val scratch = spark.conf.getOption("spark.graft.triangles.scratch")
-      .getOrElse(tempRoot) +
-      s"/tri-${java.util.UUID.randomUUID().toString.take(8)}"
+    val scratch = graft.core.Scratch.dir(spark, "tri")
     // canonical undirected edges: a < b, exact-once
     edges0.toDF("s", "t")
       .filter(col("s") =!= col("t"))

@@ -1,7 +1,5 @@
 package graft.operators.llm
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -26,28 +24,14 @@ import org.apache.spark.sql.functions._
   * files, writes its own, and deletes the stale round eagerly — zero
   * executor-memory state survives the call, and the returned frame is
   * an ordinary file-backed scan. At cluster scale, point
-  * `spark.graft.cc.scratch` at durable shared storage (HDFS/S3); the
-  * default is one JVM-scoped temp parent removed recursively by a
-  * shutdown hook (a call's final round must outlive its returned
-  * frame, so per-call cleanup cannot run earlier). Small edge sets
-  * skip files entirely and materialize rounds through the driver.
+  * `spark.graft.scratch` at durable shared storage (HDFS/S3); the
+  * default is `graft.core.Scratch`'s JVM-scoped temp root, removed
+  * recursively by its shutdown hook (a call's final round must outlive
+  * its returned frame, so per-call cleanup cannot run earlier). Small
+  * edge sets skip files entirely and materialize rounds through the
+  * driver.
   */
 object Components {
-
-  /** One JVM-scoped temp parent for unconfigured scratch, removed
-    * recursively on shutdown — each call's final round files must
-    * outlive their returned frame, so they cannot be cleaned earlier. */
-  private lazy val tempRoot: String = {
-    val d = Files.createTempDirectory("graft-cc-")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(d.toFile)
-    }
-    d.toString
-  }
 
   /** Resolve each node of `edges` (cols `doc_a`, `doc_b`) to its
     * component id (the minimum doc_id reachable from it). Nodes with no
@@ -60,14 +44,9 @@ object Components {
     // per-call unique subdir: two runs sharing a configured scratch
     // root (or racing concurrently) must never overwrite each other's
     // round files — the FINAL round backs the returned frame for its
-    // whole lifetime. The conf names the parent only; stale call dirs
-    // there are the caller's periodic cleanup (same contract as any
-    // staging area). The temp default is one JVM-scoped parent removed
-    // recursively at shutdown (deleteOnExit alone never fires on a
-    // non-empty directory).
-    val scratchRoot = spark.conf.getOption("spark.graft.cc.scratch")
-      .getOrElse(tempRoot) +
-      s"/cc-${java.util.UUID.randomUUID().toString.take(8)}"
+    // whole lifetime. Stale call dirs under a configured parent are the
+    // deployer's periodic cleanup (same contract as any staging area).
+    val scratchRoot = graft.core.Scratch.dir(spark, "cc")
     val fs = new Path(scratchRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 

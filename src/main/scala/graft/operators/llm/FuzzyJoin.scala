@@ -168,7 +168,7 @@ object FuzzyJoin {
   def resolveEntities(universe: DataFrame, pairs: DataFrame,
                       maxIter: Int = 10): DataFrame = {
     val spark = universe.sparkSession
-    val dir = graft.core.Scratch.dir(spark, "spark.graft.er.scratch", "er")
+    val dir = graft.core.Scratch.dir(spark, "er")
     pairs.select(col("name_a").as("u"), col("name_b").as("v"))
       .unionAll(pairs.select(col("name_b").as("u"), col("name_a").as("v")))
       .write.mode("overwrite").parquet(s"$dir/edges")

@@ -58,17 +58,10 @@ object PqAnn {
     * at JVM shutdown. */
   private def materializedSubs(normed: DataFrame, m: Int,
                                subDim: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
     val spark = normed.sparkSession
-    subVectors(normed, m, subDim)
-      .write.mode("overwrite").parquet(dir.toString)
-    spark.read.parquet(dir.toString)
+    val dir = graft.core.Scratch.dir(spark, "pq")
+    subVectors(normed, m, subDim).write.parquet(dir)
+    spark.read.parquet(dir)
   }
 
   private def l2dist(a: Column, b: Column): Column =
@@ -208,18 +201,12 @@ object PqAnn {
     val normed = normalized(embeddings)
     val subs = materializedSubs(normed, m, subDim)
     val books = trainBooks(subs, codes, kmeansIters)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-idx-")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
+    val dir = graft.core.Scratch.dir(spark, "ivfpq-idx")
     embeddings.select(col("vec_id"), col("embedding"))
       .join(codesFromSubs(subs, books), "vec_id")
       .join(cells, "vec_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    IvfPqIndex(spark.read.parquet(dir.toString), centroids, books, m)
+      .write.parquet(dir)
+    IvfPqIndex(spark.read.parquet(dir), centroids, books, m)
   }
 
   /** Query an already-built index: cell probe → ADC shortlist → exact

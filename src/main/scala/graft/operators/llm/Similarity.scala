@@ -440,8 +440,7 @@ object Similarity {
     // the near-dup-pair-sized output once (scratch parquet, the
     // Ranking/PqAnn contract) so the pipeline runs exactly once (r11).
     val spark = corpus.sparkSession
-    val dir = graft.core.Scratch.dir(spark,
-      "graft.semdedup.scratchDir", "semdedup")
+    val dir = graft.core.Scratch.dir(spark, "semdedup")
     semanticPairs(corpus, nCentroids, threshold)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
       .write.parquet(dir)

@@ -183,32 +183,9 @@ object ItemCf {
       .filter(to_date(col("o_orderdate")) < lit(pivotDate))
     val testOrders = orders
       .filter(to_date(col("o_orderdate")) >= lit(pivotDate))
-    // ONE train universe for the CF build AND the eval joins (the CF
-    // alone references it thrice: pair join twice + sizes; the eval
-    // thrice more: candidates, seen-filter, eval-user set). Whether
-    // that universe is scratch-materialized or left to AQE exchange
-    // reuse is a measured trade — flip `graft.cf.scratchTrain`.
-    // Measured at sf0.1 (bench min-of-3, same window): scratch 8.93 s
-    // vs AQE reuse 8.86 s — a wash even with six consumers, because
-    // AQE already reuses the distinct's exchange within the single
-    // query; default = the simpler AQE path (no scratch I/O), the
-    // same verdict `cappedCounts` reached with three consumers. On a
-    // real cluster, where exchange reuse still re-reads shuffle
-    // blocks over the network, the flag flips the trade per site.
-    // Re-A/B'd in r11 AFTER the fused-metrics change altered the
-    // reuse structure: AQE 7.34 s vs scratch 7.56 s (min-of-3, same
-    // window) — still a wash; AQE default stands.
-    val spark = lineitem.sparkSession
-    val trainRaw = basketUniverse(lineitem, trainOrders)
-    val train =
-      if (!spark.conf.getOption("graft.cf.scratchTrain")
-            .exists(_.toBoolean)) trainRaw
-      else {
-        val dir = graft.core.Scratch.dir(spark,
-          "graft.cf.scratchDir", "cf-train")
-        trainRaw.write.parquet(dir)
-        spark.read.parquet(dir)
-      }
+    // six consumers share `train` by AQE exchange reuse; scratch parquet
+    // measured a wash at sf0.1 (AQE 7.34 s vs scratch 7.56 s, min-of-3)
+    val train = basketUniverse(lineitem, trainOrders)
     val sims = itemCosineFrom(train, topN, minCo, maxBasket)
       .select(col("part_a"), col("part_b"), col("cos_micros"))
     val test = basketUniverse(lineitem, testOrders)

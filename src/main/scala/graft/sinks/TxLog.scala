@@ -104,10 +104,6 @@ object TxLog {
   private val LogDir = "_txlog"
   private val DataDir = "data"
 
-  /** Env-gated phase timing (`GRAFT_TXLOG_PROBE=1`) for the commit
-    * path — feeds the SCALE.md cost receipts. */
-  private val probeLog = sys.env.contains("GRAFT_TXLOG_PROBE")
-
   /** Observation hook fired on EVERY timed commit phase with
     * (tag, seconds): lets specs assert which phases a commit actually
     * took (e.g. "pure append = one stage+write and NO merge+write")
@@ -119,9 +115,7 @@ object TxLog {
   private[graft] def timed[T](tag: String)(body: => T): T = {
     val t0 = System.nanoTime()
     val r = body
-    val dt = (System.nanoTime() - t0) / 1e9
-    timedHook(tag, dt)
-    if (probeLog) println(f"[txlog] $tag%-24s $dt%.2f s")
+    timedHook(tag, (System.nanoTime() - t0) / 1e9)
     r
   }
 

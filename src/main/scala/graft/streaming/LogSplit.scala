@@ -17,6 +17,12 @@ import graft.functions.JsonFns
   * cached micro-batch and five filtered projections (SURVEY §1.1).
   * `explode` replaces the hand-written array loop; array columns are
   * only materialized for the rows that carry them.
+  *
+  * The is_new correction is NOT applied here: `parse`/`split`/`run`
+  * are stateless, so `common.is_new` reaches the split exactly as the
+  * client sent it. The correction is keyed state and lives in
+  * `VisitFlags.isNewCorrection` (batch) and
+  * `StatefulStreams.visitFlagsStream` (streaming).
   */
 object LogSplit {
 

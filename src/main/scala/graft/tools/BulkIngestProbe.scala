@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.TxLog
 
@@ -25,12 +24,7 @@ import graft.sinks.TxLog
   */
 object BulkIngestProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-bulkingest-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("32")
     def timed[T](tag: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val r = body

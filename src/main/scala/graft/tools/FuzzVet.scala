@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Vets the FuzzGen case pool for the driver-replayed oracle suite:
   * runs every generated case at each testdata SF and prints the row
   * count, so `FuzzGen.vettedIdx` can be pinned to cases that are
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object FuzzVet {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-fuzzvet").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.parquet.int64AsTimestampNanos", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("8")
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
       .map(s => s -> s"/root/testdata/$s")
     val idxs = (0 until 40) ++ (1000 until 1016) ++ (2000 until 2016) ++

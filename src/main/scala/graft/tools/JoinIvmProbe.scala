@@ -1,25 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase-level timing probe for the delta-join IVM commit path — the
   * harness behind the SCALE.md commit-cost receipts. Replays the
   * `dim_wide_join_incremental` schedule with a wall-clock line per
-  * mergeBatch, then a small-delta tail (1% batches) to show commit
-  * cost tracking delta size, not view size.
+  * mergeBatch and one per TxLog commit phase (from `TxLog.timedHook`),
+  * then a small-delta tail (1% batches) to show commit cost tracking
+  * delta size, not view size.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JoinIvmProbe"
   */
 object JoinIvmProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft-joinivm-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.parquet.int64AsTimestampNanos", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("32")
+    graft.sinks.TxLog.timedHook =
+      (tag, s) => println(f"[txlog] $tag%-24s $s%.2f s")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val table = java.nio.file.Files
       .createTempDirectory("graft-joinivm-probe-").toString + "/join"
@@ -125,6 +121,7 @@ object JoinIvmProbe {
     timed("load+count") {
       graft.streaming.JoinIndex.load(spark, table).get.count()
     }
+    graft.sinks.TxLog.timedHook = (_, _) => ()
     spark.stop()
   }
 }

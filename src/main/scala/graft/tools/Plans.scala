@@ -2,20 +2,12 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the formatted physical plan of each headline query
   * at sf0.001 — the artifact for reviewing pushdown/broadcast/shuffle
   * structure without running anything. */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local("4")
     val headline = Seq(
       "a3_province_order_window", "a1_keyed_tumbling_window",
       "j1_order_wide_table", "j4_snowflake_dim_chain",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.streaming.{Ev, StatefulStreams, StreamingAnn, StreamingDedup}
 
@@ -34,13 +34,7 @@ object StreamBench {
     val annRps = sys.env.getOrElse("SPARK_GRAFT_ANN_RPS", "5000").toLong
     val secs = sys.env.getOrElse("SPARK_GRAFT_STREAM_SECS", "20").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus)
     import spark.implicits._
 
     def rate(offered: Long): DataFrame = spark.readStream.format("rate")

@@ -9,10 +9,19 @@ class BatchQueriesSpec extends SparkTestBase {
   }
 
   test("every query returns rows on sf0.001") {
+    // every scratch directory a query makes lives under the one JVM
+    // temp root of graft.core.Scratch: no query leaves its own graft-*
+    // directory at the top of java.io.tmpdir
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs: Set[String] = tmp.list().toSet.filter(_.startsWith("graft-"))
+    val before = graftDirs
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf0001).count()
       assert(n > 0, s"query $name returned 0 rows")
     }
+    val added = graftDirs -- before
+    assert(added.size <= 1 && added.forall(_.startsWith("graft-scratch-")),
+      s"queries left scratch outside the JVM temp root: $added")
   }
 
   test("every query has an oracle or is explicitly rows-only") {

@@ -61,6 +61,22 @@ class RankingSpec extends SparkTestBase {
     assert(a.values.toSeq.sorted == (1L to 1000L))
   }
 
+  test("spark.graft.scratch redirects the ranking materialization") {
+    val parent = java.nio.file.Files.createTempDirectory("ranking-spec-")
+    try {
+      spark.conf.set("spark.graft.scratch", parent.toString)
+      val df = (0 until 100).map(i => ((i * 31) % 97, i)).toDF("k", "id")
+      val ranked = Ranking.withGlobalRowNumber(df, Seq(col("k").asc), "rn")
+      val plan = ranked.queryExecution.executedPlan.toString
+      assert(plan.contains(s"${parent.toString}/rank-"),
+        s"ranking must read from under the configured scratch parent:\n$plan")
+      assert(ranked.count() == 100)
+    } finally {
+      spark.conf.unset("spark.graft.scratch")
+      org.apache.commons.io.FileUtils.deleteDirectory(parent.toFile)
+    }
+  }
+
   test("bm25 ranking metrics: dcg/idcg/ndcg/rr match a longhand " +
       "recomputation from the ranking and the texts") {
     import graft.operators.llm.Retrieval
