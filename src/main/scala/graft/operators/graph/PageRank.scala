@@ -59,7 +59,8 @@ object PageRank {
     *   ChainDepth−1 rounds — overshoot refines the answer, never
     *   degrades it.
     * @param symmetric caller-asserted: every edge (a,b) has (b,a).
-    *   Unlocks two measured wins (PageRankSoak, sf0.1): the dangling
+    *   Unlocks two measured wins (SCALE.md PageRank iteration soak,
+    *   sf0.1): the dangling
     *   guard's extra edge pass is skipped (symmetry ⇒ out-degree ≥ 1
     *   everywhere), and the per-round `nodes LEFT JOIN contrib` —
     *   an SMJ + exchange + sort whose only job is padding
@@ -99,7 +100,7 @@ object PageRank {
     // the big-rank-table regime (rank join becomes a shuffle join on
     // src and bucketing on src amortizes 10 exchanges into one write)
     // — at local bench scale, plain parquet is the measured choice
-    // (PageRankSoak).
+    // (SCALE.md, PageRank iteration soak).
     edges0.write.mode("overwrite").parquet(s"$scratch/edges")
     val edges = spark.read.parquet(s"$scratch/edges")
     // Dangling guard (nodes with inbound edges but no outbound would
@@ -151,7 +152,7 @@ object PageRank {
     // job-scheduling barriers (the dominant local cost; at cluster
     // scale the same trade holds against per-job overhead). Measured
     // at sf0.1: depth 5 beats 2 (4.1 vs 4.8 s) and 10 (optimizer cost
-    // on the deep chain) — PageRankSoak.
+    // on the deep chain) — SCALE.md, PageRank iteration soak.
     var ranks = nodes.select(col("node"), lit(init).as("r"))
     var done = 0
     var converged = false

@@ -91,8 +91,9 @@ object Triangles {
     // {x ≺ y ≺ z} (≺ = the (deg, id) total order) is closed exactly
     // once, at its source-most edge (x, y) with witness z, so the
     // count is exact with no dedup — same invariant the wedge form
-    // used, same integer result bit-for-bit (TriangleSoak asserts the
-    // shapes' fingerprint equality).
+    // used, same integer result bit-for-bit (GraphSpec pins the
+    // broadcast and forced-shuffle shapes to identical counts; SCALE.md
+    // records the sf0.1 soak).
     //
     // Scale shape: two O(m)-row exchanges (attach on v, attach on w)
     // replace the O(Σ outdeg²) wedge exchange; the intersection work

@@ -186,9 +186,10 @@ object PqAnn {
 
   /** One-time index build — ALL the training cost lives here (two
     * k-means: IVF centroids + PQ codebooks, both Lloyd loops) plus
-    * the encode pass. `tools/AnnSoak` measures build vs search
-    * separately: the per-query cost is a fraction of the build, which
-    * is what makes the index amortization the point. */
+    * the encode pass. Build and search measured separately (SCALE.md
+    * §"ANN similarity", IVF-PQ build/search split): the per-query cost
+    * is a fraction of the build, which is what makes the index
+    * amortization the point. */
   def buildIvfPqIndex(embeddings: DataFrame, nCentroids: Int = 16,
                       m: Int = 8, codes: Int = 16,
                       kmeansIters: Int = 2): IvfPqIndex = {
@@ -260,7 +261,7 @@ object PqAnn {
     * BYTES each score touches), exact-rerank the shortlist. With
     * `nProbe = nCentroids` and `shortlist >= |corpus|` this
     * degenerates to brute force exactly — the identity the spec pins;
-    * recall at bounded budgets is measured in `tools/AnnSoak`.
+    * recall at bounded budgets is in SCALE.md §"ANN similarity".
     * One-shot convenience over build+search; amortizing callers hold
     * the `IvfPqIndex` and call `searchIvfPq` per query batch. */
   def ivfPqTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 10,

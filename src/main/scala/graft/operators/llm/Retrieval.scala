@@ -59,8 +59,8 @@ object Retrieval {
     * Shared subtree of the BM25 score, its df table, and the
     * relevance table in [[bm25RankingMetrics]] — identical aggregates
     * canonicalize the same, so runtime exchange reuse computes the
-    * pass once per query (verified: ReusedExchange in the final
-    * adaptive plan, `tools/PlanProbe`). Local-mode trade, measured:
+    * pass once per query (ReusedExchange in the final adaptive plan,
+    * pinned by `PlanSpec`). Local-mode trade, measured:
     * reuse serializes stages an idle 32-core box used to run as
     * redundant parallel scans (bm25 0.92 → 1.36 s at sf0.1), but it
     * removes a whole corpus tokenize+scan per consumer — the term

@@ -866,8 +866,8 @@ object TextAnalysis {
     * `llm_sequence_packing`); this query verifies their COMPOSITION
     * end-to-end against one DuckDB replay. Exact dedup stands in for
     * the LSH spine so the chain stays SQL-expressible; the LSH form of
-    * the same chain is the measured `tools/DedupSoak` artifact
-    * (SCALE.md). All three joins are doc_id-keyed — one partitioning
+    * the same chain is measured in SCALE.md §"Dedup / LSH family"
+    * (full-spine soak). All three joins are doc_id-keyed — one partitioning
     * class; the dedup aggregate is the only content-keyed exchange. */
   def corpusBuild(documents: DataFrame, seqLen: Int = 2048): DataFrame = {
     val keep = qualityGate(documents).filter(col("keep")).select("doc_id")

@@ -99,6 +99,26 @@ object CdcRouter {
     } finally { cached.unpersist(); () }
   }
 
+  /** The static config table as (source, sink, columns, pk) tuples.
+    * The config frame is broadcast-state-sized by contract (one row
+    * per routed table, matching the reference's MapState); the collect
+    * is guarded so a mis-wired fact table fails loudly, not with an
+    * OOM. */
+  private def configRows(spark: SparkSession, config: DataFrame)
+      : Seq[(String, String, String, String)] = {
+    val maxCfg = spark.conf
+      .get("spark.graft.cdc.maxConfigRows", "10000").toLong
+    // clamp: a sky-high "disable the guard" setting must not overflow
+    // into a negative limit()
+    val probe = math.min(maxCfg + 1, Int.MaxValue.toLong).toInt
+    val cfgRows = config.limit(probe).collect()
+    require(cfgRows.length <= maxCfg,
+      s"CdcRouter: config exceeds $maxCfg rows — not a config table")
+    cfgRows.map(r => (
+      r.getAs[String]("source_table"), r.getAs[String]("sink_table"),
+      r.getAs[String]("sink_columns"), r.getAs[String]("sink_pk"))).toSeq
+  }
+
   /** Streaming shell for the envelope path: CDC-envelope stream →
     * foreachBatch fan-out with delete semantics. Replay-idempotent:
     * re-processing a batch re-merges the same rows into the same
@@ -106,15 +126,7 @@ object CdcRouter {
     * restart that re-reads files converges to the same store. */
   def runEnvelope(spark: SparkSession, envStream: DataFrame,
                   config: DataFrame, outDir: String): Unit = {
-    val maxCfg = spark.conf
-      .get("spark.graft.cdc.maxConfigRows", "10000").toLong
-    val probe = math.min(maxCfg + 1, Int.MaxValue.toLong).toInt
-    val cfgRows = config.limit(probe).collect()
-    require(cfgRows.length <= maxCfg,
-      s"CdcRouter: config exceeds $maxCfg rows — not a config table")
-    val cfg = cfgRows.map(r => (
-      r.getAs[String]("source_table"), r.getAs[String]("sink_table"),
-      r.getAs[String]("sink_columns"), r.getAs[String]("sink_pk"))).toSeq
+    val cfg = configRows(spark, config)
     val q = envStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -134,20 +146,7 @@ object CdcRouter {
     * source mapped to N sinks carry N× rows into every slice. */
   def run(spark: SparkSession, cdcStream: DataFrame, config: DataFrame,
           tableCol: String, versionCol: String, outDir: String): Unit = {
-    // the config frame is broadcast-state-sized by contract (one row
-    // per routed table, matching the reference's MapState); guard the
-    // collect so a mis-wired fact table fails loudly, not with an OOM
-    val maxCfg = spark.conf
-      .get("spark.graft.cdc.maxConfigRows", "10000").toLong
-    // clamp: a sky-high "disable the guard" setting must not overflow
-    // into a negative limit()
-    val probe = math.min(maxCfg + 1, Int.MaxValue.toLong).toInt
-    val cfgRows = config.limit(probe).collect()
-    require(cfgRows.length <= maxCfg,
-      s"CdcRouter: config exceeds $maxCfg rows — not a config table")
-    val cfg = cfgRows.map(r => (
-      r.getAs[String]("source_table"), r.getAs[String]("sink_table"),
-      r.getAs[String]("sink_columns"), r.getAs[String]("sink_pk"))).toSeq
+    val cfg = configRows(spark, config)
     val q = cdcStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -14,8 +14,7 @@ class AggIndexSpec extends SparkTestBase {
   private val mms = Seq("l_shipdate")
 
   private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-aggidx-$tag-")
-      .toString + "/rollup"
+    graft.core.Scratch.dir(spark, s"aggidx-$tag")
 
   test("3 hash-split merges == one-shot rebuild (keys straddle batches)") {
     val li = Tables.lineitem(spark, sf0001)

@@ -211,7 +211,7 @@ class AsofRetrievalSpec extends SparkTestBase {
     // sf0.001 has ~100 vectors in 16 cells: probing 4 cells scans ~25%
     // of the corpus, which bounds top-10 recall hard — the floor here
     // pins the candidate wiring, not production recall (that's the
-    // fullprobe identity + the AnnSoak artifacts at 10×)
+    // fullprobe identity + the 10× soak in SCALE.md §"ANN similarity")
     assert(recall.forall(_ >= 0.3) && recall.sum / recall.size >= 0.5,
       s"4/16-probe recall@10 too low: $recall")
   }
@@ -222,8 +222,8 @@ class AsofRetrievalSpec extends SparkTestBase {
     // collapse there into a red test. Same calibration note as the
     // ivf×sq8 floor: at sf0.001 probing 4/16 cells scans ~25% of the
     // ~100-vector corpus, so the floor pins candidate wiring — the
-    // fullprobe identity and AnnSoak's 10× artifacts carry the
-    // production recall story.
+    // fullprobe identity and the 10× soak in SCALE.md §"ANN
+    // similarity" carry the production recall story.
     val emb = Tables.embeddings(spark, sf0001)
     val qids = Seq(0L, 1L, 2L, 3L, 4L)
     val exactSets = Similarity.bruteForceTopK(emb, qids, k = 10)
@@ -239,8 +239,8 @@ class AsofRetrievalSpec extends SparkTestBase {
   }
 
   test("semdedup: planted vector twins are found at the gate cell count") {
-    // mirrors AnnSoak's twin probe as a pinned floor: every 10th
-    // vector gets a near-identical twin; k-means cells bound the
+    // mirrors the ANN soak's twin probe (SCALE.md) as a pinned floor:
+    // every 10th vector gets a near-identical twin; k-means cells bound the
     // pair space, and a twin is only found if its pair lands in one
     // cell — cell-boundary splits cost a few, so the floor is a
     // majority bound, not exactness (llm_semdedup_twin carries the

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.operators.dwd.AsofJoin
 import graft.operators.dws.Behavior
 import graft.operators.dim.Scd2
 import graft.operators.llm.Sampling
@@ -50,6 +51,34 @@ class BehaviorSpec extends SparkTestBase {
       ("2024-01-01", 0, 2L), // users 1 and 2
       ("2024-01-01", 2, 1L), // user 1 returns
       ("2024-01-02", 0, 1L)))
+  }
+
+  test("as-of attribution, funnel and retention scale exactly xN over " +
+      "disjoint user replicas") {
+    // every replica gets its own user space, so each per-user result
+    // is copied N times and every count must scale by exactly N
+    val base = Tables.events(spark, sf0001)
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+    val n = 3
+    val big = (1 until n).map { r =>
+      base.select((col("event_id") + lit(r * 1000000000L)).as("event_id"),
+        col("ts"), (col("user_id") + lit(r * 1000000L)).as("user_id"),
+        col("event_type"), col("value"), col("props"))
+    }.foldLeft(base)(_.unionByName(_))
+    val asofBase = AsofJoin.purchaseAttribution(base).count()
+    assert(asofBase > 0)
+    assert(AsofJoin.purchaseAttribution(big).count() == n * asofBase)
+    def funnelUsers(ev: org.apache.spark.sql.DataFrame) = Behavior.funnel(ev)
+      .select("step", "users").as[(Int, Long)].collect().toMap
+    val funnelBase = funnelUsers(base)
+    assert(funnelBase.values.exists(_ > 0))
+    assert(funnelUsers(big) == funnelBase.map { case (s, u) => s -> u * n })
+    def cells(ev: org.apache.spark.sql.DataFrame) = Behavior
+      .retentionCohorts(ev).as[(String, Int, Long)].collect()
+      .map { case (c, d, u) => (c, d) -> u }.toMap
+    val cellsBase = cells(base)
+    assert(cellsBase.nonEmpty)
+    assert(cells(big) == cellsBase.map { case (k, u) => k -> u * n })
   }
 
   test("scd2: intervals chain gaplessly, exactly one current per key") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Properties, Test}
@@ -79,9 +77,7 @@ object EvolutionProps extends Properties("txlog-evolution") {
 
   property("K evolved commits == plain row-replace fold") =
     forAll(scheduleGen) { schedule =>
-      val dir = Files.createTempDirectory("txlog-evo-")
-      dir.toFile.deleteOnExit()
-      val t = dir.toString + "/t"
+      val t = graft.core.Scratch.dir(spark, "txlog-evo")
 
       schedule.zipWithIndex.foreach { case (cmt, i) =>
         val schema = StructType(

@@ -99,6 +99,25 @@ class GraphSpec extends SparkTestBase {
     assert(perNode == 3 * naive, s"sum-of-node-counts $perNode vs 3x$naive")
   }
 
+  test("triangles: forced-shuffle attach joins give the broadcast counts") {
+    // the adjacency attach joins broadcast off parquet stats at local
+    // scale and run as shuffle joins past the threshold; integer
+    // counts make bit-equality the check
+    val li = Tables.lineitem(spark, sf0001)
+    def counts() = Triangles.copurchaseTriangles(li)
+      .as[(Long, Long)].collect().toMap
+    val byDefault = counts()
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val shuffled =
+      try { keys.foreach(spark.conf.set(_, "-1")); counts() }
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(byDefault.values.sum > 0, "fixture has no triangles")
+    assert(shuffled == byDefault)
+  }
+
   test("co-purchase graph: popular parts rank above rare ones") {
     val li = Tables.lineitem(spark, sf0001)
     val orders = Tables.orders(spark, sf0001)

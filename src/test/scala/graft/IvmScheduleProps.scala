@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -29,7 +27,7 @@ object IvmScheduleProps extends Properties("ivm-schedules") {
   private lazy val spark = TestSession.spark
 
   private def freshTable(tag: String): String =
-    Files.createTempDirectory(s"graft-ivmprop-$tag-").toString + "/t"
+    graft.core.Scratch.dir(spark, s"ivmprop-$tag")
 
   // ---- generators -------------------------------------------------
 

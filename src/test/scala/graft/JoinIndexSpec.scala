@@ -27,8 +27,7 @@ class JoinIndexSpec extends SparkTestBase {
 
   test("three incremental batch pairs equal the one-shot join, " +
       "including cross-batch and line-before-order rows") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     (0 until 3).foreach(i => JoinIndex.mergeBatch(
       odf(orderBatches(i)), ldf(lineBatches(i)), table,
       key = "o_orderkey", pkCols = Seq("o_orderkey", "l_linenumber"),
@@ -45,8 +44,7 @@ class JoinIndexSpec extends SparkTestBase {
   }
 
   test("a replayed batch id is applied exactly once") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     JoinIndex.mergeBatch(odf(orderBatches(0)), ldf(lineBatches(0)),
       table, "o_orderkey", Seq("o_orderkey", "l_linenumber"), 1L)
     val v1 = JoinIndex.load(spark, table).get.collect().toSet
@@ -57,8 +55,7 @@ class JoinIndexSpec extends SparkTestBase {
   }
 
   test("a pk-violating right batch fails loudly instead of folding") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     val dup = ldf(Seq((1L, 1, 5.0), (1L, 1, 6.0))) // same declared pk
     val e = intercept[IllegalArgumentException] {
       JoinIndex.mergeBatch(odf(orderBatches(0)), dup, table,
@@ -70,8 +67,7 @@ class JoinIndexSpec extends SparkTestBase {
   test("streamed side-tagged foreachBatch maintenance == one-shot join") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     // (side, o_orderkey, o_custkey, l_linenumber, l_quantity):
     // left rows carry (key, cust), right rows (key, ln, qty)
     val ms = MemoryStream[(String, Long, Long, Int, Double)]
@@ -100,8 +96,7 @@ class JoinIndexSpec extends SparkTestBase {
 
   test("one-sided batches: rights-only then lefts-only still converge " +
       "to the one-shot join") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     // batch 1 carries ONLY lineitems, batch 2 ONLY orders
     JoinIndex.mergeBatch(odf(Nil), ldf(lineBatches.flatten), table,
       "o_orderkey", Seq("o_orderkey", "l_linenumber"), 1L)
@@ -123,8 +118,7 @@ class JoinIndexSpec extends SparkTestBase {
   // key dtypes must skip pruning, never crash in the bloom hasher ----
 
   test("join-key dtype mismatch between the two deltas fails loudly") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     val ordInt = Seq((1, 10L)).toDF("o_orderkey", "o_custkey") // int key
     val liLong = ldf(Seq((1L, 1, 5.0)))                        // long key
     val e = intercept[IllegalArgumentException] {
@@ -136,8 +130,7 @@ class JoinIndexSpec extends SparkTestBase {
 
   test("join-key dtype drift against the stored accumulators fails " +
       "loudly instead of silently clearing holder files") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     JoinIndex.mergeBatch(odf(orderBatches(0)), ldf(lineBatches(0)),
       table, "o_orderkey", Seq("o_orderkey", "l_linenumber"), 1L)
     // batch 2 switches both sides to int keys — deltas agree with
@@ -154,8 +147,7 @@ class JoinIndexSpec extends SparkTestBase {
 
   test("a decimal join key (not raw-bloom-probeable) skips pruning and " +
       "still converges to the one-shot join") {
-    val table = java.nio.file.Files
-      .createTempDirectory("graft-joinidx-spec-").toString + "/j"
+    val table = graft.core.Scratch.dir(spark, "joinidx-spec")
     def dec(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("o_orderkey",
         col("o_orderkey").cast("decimal(10,2)"))

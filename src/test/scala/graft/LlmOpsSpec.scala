@@ -95,6 +95,12 @@ class LlmOpsSpec extends SparkTestBase {
       .agg(collect_set(xxhash64(col("shingle"))).as("grams"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     assert(natG == relG)
+    // the shingles() array form the inline signatures use sees the
+    // same per-doc set, short-doc fallback included
+    val arrG = fixture.select(col("doc_id"),
+        transform(DedupOps.shingles(col("text")), sh => xxhash64(sh)))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+    assert(arrG == relG)
     // the native arrays really are sorted (determinism contract)
     DedupOps.gramSetsNative(fixture).collect().foreach { r =>
       val a = r.getSeq[Long](1)
@@ -1260,8 +1266,9 @@ class LlmOpsSpec extends SparkTestBase {
     assert(full == bf)
     // recall vs BRUTE FORCE on the structureless synthetic vectors is
     // probe-fraction-bounded for ANY IVF method (why llm_ann_ivf is
-    // rows-only; AnnSoak measures real geometry at 32k) — the sharp
-    // invariants here isolate each composed stage instead:
+    // rows-only; SCALE.md §"ANN similarity" records real geometry at
+    // 32k) — the sharp invariants here isolate each composed stage
+    // instead:
     // (a) full shortlist == plain IVF exactly: the kmeans index and
     //     probe ranking are shared and deterministic, so the candidate
     //     sets coincide and exact rerank == exact scoring
@@ -1273,7 +1280,8 @@ class LlmOpsSpec extends SparkTestBase {
     //     budget grows — the PQ contract. (On these near-uniform
     //     random vectors the cosine spread is comparable to 8-code
     //     quantization error, so small-budget agreement is inherently
-    //     soft; the structured-corpus quality numbers live in AnnSoak.)
+    //     soft; the structured-corpus quality numbers live in SCALE.md
+    //     §"ANN similarity".)
     val ivfSet = ivfSame.map(r => (r.getLong(0), r.getLong(1))).toSet
     def agree(shortlist: Int): Double = {
       val s = PqAnn.ivfPqTopK(emb, qids, shortlist = shortlist).collect()

@@ -199,6 +199,15 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("ReusedExchange"), p)
   }
 
+  test("llm_bm25_topk: the query-term tf pass runs once and is reused") {
+    // the tf aggregate feeds the score and its df table; identical
+    // subtrees must collapse to one exchange in the final adaptive plan
+    val df = SparkEntry.queries("llm_bm25_topk")(spark, sf0001)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("ReusedExchange"), p)
+  }
+
   test("top-k plans as TakeOrderedAndProject, never a global sort") {
     val p = plan("q_topk_orders")
     assert(p.contains("TakeOrderedAndProject"), p)

@@ -10,8 +10,7 @@ import graft.operators.dim.Scd2
 class Scd2MergeSpec extends SparkTestBase {
 
   private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"scd2-$tag-").toString +
-      "/scd2"
+    graft.core.Scratch.dir(spark, s"scd2-$tag")
 
   private def mergeAll(table: String,
                        batches: Seq[org.apache.spark.sql.DataFrame]): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -15,11 +14,7 @@ import graft.sinks.TxLog
 class TxLogSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshTable(): String = {
-    val d = Files.createTempDirectory("txlog-")
-    d.toFile.deleteOnExit()
-    d.toString + "/t"
-  }
+  private def freshTable(): String = graft.core.Scratch.dir(spark, "txlog")
 
   test("sequential upserts: contiguous versions, last-wins state, time travel") {
     val t = freshTable()
