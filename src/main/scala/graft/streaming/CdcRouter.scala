@@ -35,15 +35,33 @@ object CdcRouter {
   def prune(routed: DataFrame, sinkColumns: String): DataFrame =
     routed.select(sinkColumns.split(",").map(c => col(c.trim)): _*)
 
+  /** Run `write` for every config row, the sink tables concurrently
+    * (`graft.core.Par`, at most `defaultParallelism` threads). Rows
+    * that share a sink table stay on one worker, in config order: each
+    * merge reads and swaps the whole store, so two at once would race.
+    * Returns once every write has finished; the first failure is
+    * rethrown after the others have joined. */
+  private def perSink(spark: SparkSession,
+                      config: Seq[(String, String, String, String)])(
+      write: ((String, String, String, String)) => Unit): Unit = {
+    val bySink = config.groupBy(_._2)
+    graft.core.Par.foreach(config.map(_._2).distinct.map(bySink),
+      spark.sparkContext.defaultParallelism)(_.foreach(write))
+  }
+
   /** Per-table fan-out of one (cached) batch: for each configured sink
     * table, prune columns and MERGE into the keyed store by the sink PK
     * ordered by `versionCol` (K5 upsert semantics, via
     * `Sinks.upsertParquet` — prior batches survive; an empty routed
-    * slice is a no-op, never a wipe). */
+    * slice is a no-op, never a wipe). The sink tables are written
+    * concurrently (`perSink`, at most `defaultParallelism` threads).
+    * After a failed merge no further sink starts and the batch fails;
+    * stores already merged keep their rows, and a replay re-merges
+    * them to the same winners. */
   def fanOut(batch: DataFrame, config: Seq[(String, String, String, String)],
              tableCol: String, versionCol: String, outDir: String): Unit = {
     val cached = batch.persist()
-    try config.foreach { case (source, sink, cols, pk) =>
+    try perSink(batch.sparkSession, config) { case (source, sink, cols, pk) =>
       // append the version column only when the config doesn't already
       // list it (a CDC op_ts is a natural sink column; naming it twice
       // would make the upsert's orderBy ambiguous)
@@ -87,12 +105,16 @@ object CdcRouter {
     * version survives in the store. `Sinks.readDim` filters them on
     * read. Version ties (same ts, e.g. a delete+reinsert in one
     * binlog second) break on the row content hash — the same total
-    * order every upsert in this repo uses. */
+    * order every upsert in this repo uses. The sink tables are
+    * written concurrently (`perSink`, at most `defaultParallelism`
+    * threads). After a failed merge no further sink starts and the
+    * batch fails; stores already merged keep their rows, and the
+    * replay is idempotent. */
   def fanOutEnvelope(batch: DataFrame,
                      config: Seq[(String, String, String, String)],
                      outDir: String): Unit = {
     val cached = batch.persist()
-    try config.foreach { case (source, sink, cols, pk) =>
+    try perSink(batch.sparkSession, config) { case (source, sink, cols, pk) =>
       val rows = flattenEnvelope(cached, source, cols)
       if (!rows.isEmpty)
         graft.sinks.Sinks.upsertParquet(rows, s"$outDir/$sink", pk, "__ver")

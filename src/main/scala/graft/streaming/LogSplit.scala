@@ -79,14 +79,21 @@ object LogSplit {
   }
 
   /** Streaming shell: readStream → foreachBatch { cache; write the five
-    * splits } — the reference's five Kafka sinks (`BaseLogApp
-    * .java:182-192`) become five parquet sinks under `outDir`. */
+    * splits and the dirty side output } — the reference's Kafka sinks
+    * (`BaseLogApp.java:182-192`) become six parquet sinks under
+    * `outDir`. As there, the sinks are written concurrently: through
+    * `graft.core.Par`, on at most `defaultParallelism` threads. A
+    * failed write fails the batch and the query once the other
+    * writes have finished; splits already written keep their appends
+    * (parquet append is not idempotent, so a re-run over the same
+    * files appends them again). */
   def run(spark: SparkSession, rawStream: DataFrame, outDir: String): Unit = {
     val q = parse(rawStream).writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val cached = batch.persist()
-        try split(cached).foreach { case (name, df) =>
+        try graft.core.Par.foreach(split(cached).toSeq,
+            spark.sparkContext.defaultParallelism) { case (name, df) =>
           df.write.mode("append").parquet(s"$outDir/$name")
         } finally { cached.unpersist(); () }
       }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, expr}
+import graft.core.Scratch
 import graft.streaming.CdcRouter
 
 /** Config-driven DIM routing (J5/K5/K6): broadcast-join routing,
@@ -21,7 +22,7 @@ class CdcRouterSpec extends SparkTestBase {
   ).toDF("source_table", "sink_table", "sink_columns", "sink_pk")
 
   test("streaming fan-out: routes, prunes, upserts last-wins by pk") {
-    val out = Files.createTempDirectory("cdc_router").toString
+    val out = Scratch.dir(spark, "cdc_router")
     val ms = MemoryStream[(String, String, String, String, Long)]
     ms.addData(
       ("dim_a", "1", "alice", "x", 1L),
@@ -45,7 +46,7 @@ class CdcRouterSpec extends SparkTestBase {
   }
 
   test("multi-batch fan-out merges across batches; empty slice is a no-op") {
-    val out = Files.createTempDirectory("cdc_router2").toString
+    val out = Scratch.dir(spark, "cdc_router2")
     val ms = MemoryStream[(String, String, String, String, Long)]
     val cdcStream = ms.toDF().toDF("source_table", "id", "name", "extra", "ver")
     // batch 1: rows for both tables
@@ -59,6 +60,30 @@ class CdcRouterSpec extends SparkTestBase {
       .map(r => (r.getAs[String]("id"), r.getAs[String]("name"))).toMap
     assert(a == Map("1" -> "alice2", "2" -> "bob")) // merged, last-wins by ver
     assert(spark.read.parquet(s"$out/sink_b").count() == 1) // not wiped
+  }
+
+  test("fan-out wider than defaultParallelism: each store equals a " +
+    "batch upsert of its own slice; two sources into one sink both land") {
+    val out = Scratch.dir(spark, "cdc_router_wide")
+    val n = spark.sparkContext.defaultParallelism + 2
+    // dim_x shares sink_0 with dim_0: its merges must stay sequential
+    val cfg = ((0 until n).map(i => (s"dim_$i", s"sink_$i", "id,name", "id")) :+
+      (("dim_x", "sink_0", "id,name", "id")))
+    val rows = cfg.map(_._1).zipWithIndex.flatMap { case (t, i) => Seq(
+      (t, "1", s"$t-a", "x", 1L), (t, "1", s"$t-b", "x", 2L),
+      (t, s"k$i", s"$t-c", "x", 1L)) }
+    val ms = MemoryStream[(String, String, String, String, Long)]
+    ms.addData(rows: _*)
+    CdcRouter.run(spark, ms.toDF().toDF("source_table", "id", "name", "extra", "ver"),
+      cfg.toDF("source_table", "sink_table", "sink_columns", "sink_pk"),
+      "source_table", "ver", out)
+    cfg.groupBy(_._2).foreach { case (sink, srcs) =>
+      val slice = rows.filter(r => srcs.exists(_._1 == r._1))
+        .map(r => (r._2, r._3, r._5)).toDF("id", "name", "ver")
+      assertSameRows(spark.read.parquet(s"$out/$sink").select("id", "name", "ver"),
+        graft.sinks.Sinks.upsert(slice, None, "id", "ver"))
+    }
+    assert(spark.read.parquet(s"$out/sink_0").count() == 3)
   }
 
   // ---- Debezium/Maxwell-envelope replay: delete + out-of-order ops ----
@@ -77,8 +102,9 @@ class CdcRouterSpec extends SparkTestBase {
 
   test("envelope replay via file stream: deletes land as tombstones, " +
     "stale pre-delete updates in later batches still lose") {
-    val in = Files.createTempDirectory("cdc_env_in").toString
-    val out = Files.createTempDirectory("cdc_env_out").toString
+    val in = Files.createDirectories(
+      java.nio.file.Paths.get(Scratch.dir(spark, "cdc_env_in"))).toString
+    val out = Scratch.dir(spark, "cdc_env_out")
     def runBatch(name: String, lines: Seq[String]): Unit = {
       Files.write(java.nio.file.Paths.get(in, name),
         lines.mkString("", "\n", "\n").getBytes("UTF-8"))
@@ -145,7 +171,7 @@ class CdcRouterSpec extends SparkTestBase {
   }
 
   test("sink_columns already containing the version column stays unambiguous") {
-    val out = Files.createTempDirectory("cdc_router3").toString
+    val out = Scratch.dir(spark, "cdc_router3")
     val cfgWithVer = Seq(("dim_a", "sink_a", "id,name,ver", "id"))
       .toDF("source_table", "sink_table", "sink_columns", "sink_pk")
     val ms = MemoryStream[(String, String, String, String, Long)]

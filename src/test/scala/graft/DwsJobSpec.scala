@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.streaming.{DwsJob, Ev}
 
 /** End-to-end DWS streaming job + the approx-distinct 100 TB swap. */
@@ -13,7 +13,7 @@ class DwsJobSpec extends SparkTestBase {
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   test("DWS job: stream -> windowed agg -> upsert store == batch agg") {
-    val base = Files.createTempDirectory("dws").toString
+    val base = Scratch.dir(spark, "dws")
     val store = s"$base/store"
     val ckpt = Some(s"$base/ckpt")
     val evs = Seq(
@@ -41,7 +41,7 @@ class DwsJobSpec extends SparkTestBase {
   }
 
   test("end-to-end soak: file stream -> LogSplit -> window -> TxLog, restart mid-stream == batch twin") {
-    val base = Files.createTempDirectory("e2e").toString
+    val base = Scratch.dir(spark, "e2e")
     val srcDir = new java.io.File(s"$base/src"); srcDir.mkdirs()
     val store = s"$base/store"
     val ckpt = s"$base/ckpt"

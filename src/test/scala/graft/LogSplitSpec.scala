@@ -58,6 +58,45 @@ class LogSplitSpec extends SparkTestBase {
     assert(a.map(_.getString(0)).toSeq == Seq("favor_add"))
   }
 
+  test("streamed run over a file backlog writes the batch split of " +
+    "every file, dirty lines included") {
+    val base = graft.core.Scratch.dir(spark, "logsplit")
+    val in = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(base, "in"))
+    def page(mid: String, ts: Long, displays: Int, action: Boolean) = {
+      val ds = (1 to displays).map(i =>
+        s"""{"item":"$i","item_type":"sku_id","pos_id":$i,"order":$i}""")
+      val as = if (action) Seq(
+        s"""{"item":"9","item_type":"sku_id","action_id":"cart_add","ts":${ts + 5}}""")
+        else Nil
+      s"""{"common":{"mid":"$mid","uid":"1","vc":"v1","ch":"web","ar":"1","is_new":"0","ba":"b","md":"m","os":"o"},""" +
+        s""""page":{"page_id":"home","during_time":10},""" +
+        s""""displays":${ds.mkString("[", ",", "]")},""" +
+        s""""actions":${as.mkString("[", ",", "]")},"ts":$ts}"""
+    }
+    val files = Seq(
+      Seq(pageLog, startLog, dirtyLog, page("m3", 1675315202000L, 2, false)),
+      Seq(page("m4", 1675315203000L, 0, true), "", "garbage",
+        page("m5", 1675315204000L, 3, true), startLog))
+    files.zipWithIndex.foreach { case (lines, i) =>
+      java.nio.file.Files.write(in.resolve(s"f$i.json"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    LogSplit.run(spark,
+      spark.readStream.option("maxFilesPerTrigger", "1").text(in.toString),
+      s"$base/out")
+    val want = LogSplit.split(LogSplit.parse(spark.read.text(in.toString)))
+    assert(want.keySet == Set("dirty", "err", "start", "page", "display",
+      "action"))
+    want.foreach { case (name, df) =>
+      assertSameRows(spark.read.parquet(s"$base/out/$name"), df)
+    }
+    assert(want("dirty").count() == 3)
+    // one append per file: both files went through their own batch
+    assert(new java.io.File(s"$base/out/dirty").listFiles()
+      .count(_.getName.startsWith("part-")) >= files.size)
+  }
+
   test("variantPropsAgg parses through a genuine VARIANT column and " +
     "matches the per-string get_json_object twin") {
     val events = graft.core.Tables.events(spark, sf0001)

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 import graft.operators.skew.Salting
 
 /** Scale-posture mechanics: bucketed co-located joins (no shuffle) and
@@ -11,7 +9,7 @@ import graft.operators.skew.Salting
 class ScaleSpec extends SparkTestBase {
 
   test("bucketed tables co-locate the join: no shuffle exchange") {
-    val wh = Files.createTempDirectory("bucketed").toString
+    val wh = Scratch.dir(spark, "bucketed")
     val li = Tables.lineitem(spark, sf0001).select("l_orderkey", "l_quantity")
     val o = Tables.orders(spark, sf0001).select("o_orderkey", "o_custkey")
     li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
+import graft.core.Scratch
 import graft.sinks.Sinks
 import graft.sources.Sources
 
@@ -25,7 +24,7 @@ class SinksSourcesSpec extends SparkTestBase {
   }
 
   test("file stream source drives the windowed agg end-to-end") {
-    val dir = Files.createTempDirectory("filestream").toString
+    val dir = Scratch.dir(spark, "filestream")
     val evs = graft.core.Tables.events(spark, sf0001).limit(100)
     evs.write.parquet(s"$dir/in")
     val stream = Sources.fileStream(spark, evs.schema, s"$dir/in")
@@ -42,7 +41,7 @@ class SinksSourcesSpec extends SparkTestBase {
   }
 
   test("K3/K5 upsert: last-wins by pk, version-ordered, idempotent") {
-    val dir = Files.createTempDirectory("upsert").toString + "/store"
+    val dir = Scratch.dir(spark, "upsert") + "/store"
     val b1 = Seq(("1", "alice", 1L), ("2", "bob", 1L)).toDF("id", "name", "ver")
     Sinks.upsertParquet(b1, dir, "id", "ver")
     val b2 = Seq(("1", "alice2", 2L), ("3", "carol", 1L)).toDF("id", "name", "ver")
@@ -73,7 +72,7 @@ class SinksSourcesSpec extends SparkTestBase {
   }
 
   test("K7 quarantine appends corrupt rows to a parquet path") {
-    val dir = Files.createTempDirectory("quarantine").toString + "/dirty"
+    val dir = Scratch.dir(spark, "quarantine") + "/dirty"
     Sinks.quarantine(Seq("{bad json").toDF("value"), dir)
     Sinks.quarantine(Seq("{worse").toDF("value"), dir)
     assert(spark.read.parquet(dir).count() == 2)

@@ -67,8 +67,7 @@ class StreamingDedupSpec extends SparkTestBase {
 
   test("incremental index MERGE: K commits equal a from-scratch rebuild, " +
     "re-ingest is idempotent, probes agree") {
-    val dir = java.nio.file.Files.createTempDirectory("dedup_index")
-      .toString + "/idx"
+    val dir = graft.core.Scratch.dir(spark, "dedup_index") + "/idx"
     val corpus = DedupOps.withNearDuplicates(Tables.documents(spark, sf0001))
     val batches = Seq(
       corpus.filter(col("doc_id") % 3 === 0),

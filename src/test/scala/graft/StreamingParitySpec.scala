@@ -231,8 +231,7 @@ class StreamingParitySpec extends SparkTestBase {
   }
 
   test("checkpoint restart is exactly-once with an idempotent sink") {
-    import java.nio.file.Files
-    val base = Files.createTempDirectory("eo").toString
+    val base = graft.core.Scratch.dir(spark, "eo")
     val evs = this.evs
     evs.take(4).toDF().write.parquet(s"$base/in/chunk=1")
     def runOnce(): Unit = {
